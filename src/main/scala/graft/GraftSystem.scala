@@ -191,7 +191,9 @@ object GraftSystem {
       version: Int = 1): GraftSystem = {
     val d = data.select(col("vec_id"), col("embedding"))
     val model = Lsh.fit(d, "embedding", params)
-    val codes = LshIndex.codes(d, "vec_id", "embedding", model)
+    // spread: the coding map stage must not run on a one-split corpus
+    // (no-op at scale, LshIndex.spread scaladoc)
+    val codes = LshIndex.codes(LshIndex.spread(d), "vec_id", "embedding", model)
     new GraftSystem(spark, model, blockSize, codes,
       LshIndex.build(codes, blockSize), d,
       VersionedCrypto.encrypt(d, "vec_id", "embedding", version), version)
@@ -207,7 +209,7 @@ object GraftSystem {
       VersionedCrypto.decrypt(store.filter(col("kv") === v), v)
         .select(col("id").as("vec_id"), col("vec").as("embedding"))
     }.reduce(_ unionByName _)
-    val codes = LshIndex.codes(vecs, "vec_id", "embedding", model)
+    val codes = LshIndex.codes(LshIndex.spread(vecs), "vec_id", "embedding", model)
     new GraftSystem(spark, model, blockSize, codes,
       LshIndex.build(codes, blockSize), vecs, store, version)
   }

@@ -141,9 +141,11 @@ object Dedup {
    */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
       numPerms: Int, shingleWidth: Int): DataFrame =
-    docs.select(col(idCol).as("id"),
-      SignatureExprs.minhash_shingle_sig(
-        tokens(col(textCol)), shingleWidth, numPerms).as("sig"))
+    docs.select(col(idCol).as("id"), minhashSig(col(textCol), numPerms, shingleWidth).as("sig"))
+
+  /** The `sig` column of [[minhashSignatures]]. */
+  private def minhashSig(text: Column, numPerms: Int, shingleWidth: Int): Column =
+    SignatureExprs.minhash_shingle_sig(tokens(text), shingleWidth, numPerms)
 
   /**
    * `dedup_minhash_tune`: the analytic (bands, rowsPerBand) planner
@@ -683,13 +685,17 @@ object Dedup {
       .select(col("id"), col("sig"))
     // delta docs are signed fresh (the delta pass's map-only signing),
     // NOT read back from the fixture — so the oracle equality is a
-    // real recompute check, not a parquet roundtrip
-    val admittedSigs = minhashSignatures(
-        graft.index.LshIndex.spread(corpus.filter(deltaSplit(col("doc_id")))),
-        "doc_id", "text", numPerms = 64, shingleWidth = 3)
-      .join(drops, Seq("id"), "left_anti")
-    baseSigs.unionByName(admittedSigs)
-      .select(col("id"), posexplode(col("sig")).as(Seq("slot", "v")))
+    // real recompute check, not a parquet roundtrip. Drops leave before
+    // signing, and posexplode takes the signature inline: over a `sig`
+    // attribute the optimizer infers `size(sig) > 0` and pushes it
+    // below the projection as a second signature kernel per doc (the
+    // LshIndex.codes rule)
+    val admitted = graft.index.LshIndex.spread(corpus.filter(deltaSplit(col("doc_id"))))
+      .join(drops.select(col("id").as("doc_id")), Seq("doc_id"), "left_anti")
+      .select(col("doc_id").as("id"),
+        posexplode(minhashSig(col("text"), numPerms = 64, shingleWidth = 3)).as(Seq("slot", "v")))
+    baseSigs.select(col("id"), posexplode(col("sig")).as(Seq("slot", "v")))
+      .unionByName(admitted)
   }
 
   val dedupMinhashCompactSql: String =

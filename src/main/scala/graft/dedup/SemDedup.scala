@@ -89,6 +89,7 @@ object SemDedup {
     * so the streaming gate routes with the identical expression (its
     * ts column rides outside it) — `h.cell` / `h.csim` are the fields. */
   private[graft] def centAssignStruct(cents: Array[Array[Float]]): Column = {
+    require(cents.nonEmpty, "centroid assignment needs at least one centroid")
     val centLit = typedLit(cents.zipWithIndex.map { case (cv, cell) => (cell, cv.toSeq) }.toSeq)
     // r15: argmin via array_min over (cdist, cell) structs + ONE cosine
     // for the winning centroid, instead of sorting a C-length struct
@@ -102,7 +103,12 @@ object SemDedup {
       c => struct(vec_l2(col("embedding"), c.getField("_2")).as("cdist"),
         c.getField("_1").as("cell"))))
     val winner = element_at(centLit, m.getField("cell") + 1).getField("_2")
-    struct(m.getField("cell").as("cell"),
+    // `cents` is not empty, so `cell` is never null; the coalesce
+    // only tells the optimizer so. A nullable `cell` made every cell
+    // equi-join infer `isnotnull(cell)`, which predicate pushdown
+    // rewrote into a Filter re-running the whole C-centroid argmin
+    // below the projection (PlanPostureSpec pins this)
+    struct(coalesce(m.getField("cell"), lit(-1)).as("cell"),
       round(vec_cosine(col("embedding"), winner), 4).as("csim"))
   }
 

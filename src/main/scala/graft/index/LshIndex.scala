@@ -42,6 +42,11 @@ object LshIndex {
    * magnitude more splits than cores, so the branch is a no-op there —
    * this never adds a shuffle at scale, it only unblocks parallelism
    * when the source is a handful of files.
+   *
+   * Callers include the corpus coding of [[graft.GraftSystem]] (setup
+   * and restore) and [[graft.query.AnnQuery]]: block numbering is a
+   * global sort on (t, d, key, id), so membership, summaries and
+   * answers do not depend on how the coded input is partitioned.
    */
   def spread(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
@@ -49,10 +54,17 @@ object LshIndex {
     else df.repartition(target)
   }
 
-  /** (id, t, d, key, code) — one row per vector per (table, division). */
+  /**
+   * (id, t, d, key, code) — one row per vector per (table, division).
+   *
+   * `explode` must take the `lshCodes` expression inline, never an
+   * aliased column: over an attribute, `InferFiltersFromGenerate` adds
+   * `size(tdc) > 0 AND isnotnull(tdc)`, which predicate pushdown turns
+   * back into two more kernel calls per vector below the projection
+   * (PlanPostureSpec pins one call).
+   */
   def codes(df: DataFrame, idCol: String, vecCol: String, model: LshModel): DataFrame =
-    df.select(col(idCol).cast("long").as("id"), Lsh.lshCodes(col(vecCol), model).as("tdc"))
-      .select(col("id"), explode(col("tdc")).as("c"))
+    df.select(col(idCol).cast("long").as("id"), explode(Lsh.lshCodes(col(vecCol), model)).as("c"))
       .select(col("id"), col("c.t").as("t"), col("c.d").as("d"),
         col("c.key").as("key"), col("c.code").as("code"))
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -77,14 +77,25 @@ object Embeddings {
    * downstream pipelines compose.
    */
   def projectEmbedding(data: DataFrame, vecCol: String,
-      matrix: Array[Array[Double]]): DataFrame = {
+      matrix: Array[Array[Double]]): DataFrame =
+    data.withColumn("proj", projection(vecCol, matrix))
+
+  /** The `proj` array column of [[projectEmbedding]]. */
+  private def projection(vecCol: String, matrix: Array[Array[Double]]): Column = {
     val rows = typedLit(matrix.zipWithIndex.map { case (w, r) => (r, w.toSeq) }.toSeq)
-    data.withColumn("proj",
-      transform(rows, row => struct(row.getField("_1").as("r"),
-        round(aggregate(
-          zip_with(col(vecCol).cast("array<double>"), row.getField("_2"), (x, w) => x * w),
-          lit(0.0), (acc, x) => acc + x), 4).as("v"))))
+    transform(rows, row => struct(row.getField("_1").as("r"),
+      round(aggregate(
+        zip_with(col(vecCol).cast("array<double>"), row.getField("_2"), (x, w) => x * w),
+        lit(0.0), (acc, x) => acc + x), 4).as("v")))
   }
+
+  /** (vec_id, r, v) rows of a projection column, exploded inline: over
+    * an aliased `proj` attribute the optimizer infers `size(proj) > 0`
+    * and pushes it below the projection as a second projection per row
+    * (the [[graft.index.LshIndex.codes]] rule). */
+  private def explodeProjection(data: DataFrame, proj: Column): DataFrame =
+    data.select(col("vec_id"), explode(proj).as("p"))
+      .select(col("vec_id"), col("p.r").as("r"), col("p.v").as("v"))
 
   def embedProject(spark: SparkSession, sfDir: String): DataFrame = {
     val data = Tables.embeddings(spark, sfDir)
@@ -95,9 +106,7 @@ object Embeddings {
       m.zipWithIndex.map { case (w, r) => (r, w.toSeq) }.toSeq.toDF("r", "w")
         .coalesce(1).write.mode("overwrite").parquet(ProjExportPath)
     }
-    projectEmbedding(data, "embedding", m)
-      .select(col("vec_id"), explode(col("proj")).as("p"))
-      .select(col("vec_id"), col("p.r").as("r"), col("p.v").as("v"))
+    explodeProjection(data, projection("embedding", m))
   }
 
   // ---- PCA whitening (data-fit rotation) ----
@@ -269,13 +278,16 @@ object Embeddings {
     * DuckDB's `list_dot_product(...) + b` over the fixture, so the
     * doubles match bit-for-bit (rounded 4). */
   def pcaTransform(data: DataFrame, vecCol: String,
-      comps: Array[(Array[Double], Double)]): DataFrame = {
+      comps: Array[(Array[Double], Double)]): DataFrame =
+    data.withColumn("proj", pcaProjection(vecCol, comps))
+
+  /** The `proj` array column of [[pcaTransform]]. */
+  private def pcaProjection(vecCol: String, comps: Array[(Array[Double], Double)]): Column = {
     val rows = typedLit(comps.zipWithIndex.map { case ((w, b), r) => (r, w.toSeq, b) }.toSeq)
-    data.withColumn("proj",
-      transform(rows, row => struct(row.getField("_1").as("r"),
-        round(aggregate(
-          zip_with(col(vecCol).cast("array<double>"), row.getField("_2"), (x, w) => x * w),
-          lit(0.0), (acc, x) => acc + x) + row.getField("_3"), 4).as("v"))))
+    transform(rows, row => struct(row.getField("_1").as("r"),
+      round(aggregate(
+        zip_with(col(vecCol).cast("array<double>"), row.getField("_2"), (x, w) => x * w),
+        lit(0.0), (acc, x) => acc + x) + row.getField("_3"), 4).as("v")))
   }
 
   /**
@@ -398,9 +410,7 @@ object Embeddings {
 
   def embedPca(spark: SparkSession, sfDir: String): DataFrame = {
     val comps = fittedPca(spark, sfDir)
-    pcaTransform(Tables.embeddings(spark, sfDir), "embedding", comps)
-      .select(col("vec_id"), explode(col("proj")).as("p"))
-      .select(col("vec_id"), col("p.r").as("r"), col("p.v").as("v"))
+    explodeProjection(Tables.embeddings(spark, sfDir), pcaProjection("embedding", comps))
   }
 
   // `+ 0.0` after ROUND: DuckDB's ROUND preserves the IEEE sign bit

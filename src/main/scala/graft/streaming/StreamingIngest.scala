@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.lsh.{Lsh, LshModel}
+import graft.index.LshIndex
+import graft.lsh.LshModel
 
 /**
  * Structured Streaming ingest (re-expression of fspann
@@ -31,11 +32,7 @@ object StreamingIngest {
       .schema(schema)
       .option("maxFilesPerTrigger", 4)
       .parquet(inputDir)
-      .select(col("vec_id").cast("long").as("id"),
-        Lsh.lshCodes(col("embedding"), model).as("tdc"))
-      .select(col("id"), explode(col("tdc")).as("c"))
-      .select(col("id"), col("c.t").as("t"), col("c.d").as("d"),
-        col("c.key").as("key"), col("c.code").as("code"))
+      .transform(LshIndex.codes(_, "vec_id", "embedding", model))
 
   /** Watermarked 1-hour tumbling-window event aggregation (streaming twin of q_events_window). */
   def windowedEventCounts(events: DataFrame): DataFrame =

@@ -175,6 +175,24 @@ class GraftSystemSpec extends SparkSpecBase {
     assert(live == fresh, "loaded system diverged from the exporting one")
   }
 
+  test("answers do not depend on corpus partitioning, also after export + load") {
+    // setup spreads a one-split corpus before coding; block numbering
+    // is a global sort, so the spread must be result-neutral
+    def answer(sys: GraftSystem) = sys.query(queries(5), k = 10).collect()
+      .map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
+    val one = GraftSystem.setup(spark, corpus.coalesce(1))
+    val eight = GraftSystem.setup(spark, corpus.repartition(8))
+    val expected = answer(one)
+    assert(expected.nonEmpty)
+    assert(answer(eight) == expected, "an 8-split corpus answered differently")
+    val dir = java.nio.file.Files.createTempDirectory("graftsys-spread").toString
+    try {
+      eight.export(dir)
+      assert(answer(GraftSystem.load(spark, dir)) == expected,
+        "export + load diverged from the one-split answer")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("rotation migrates exactly the touched set; restore rebuilds from the store") {
     val sys = GraftSystem.setup(spark, corpus)
     sys.touch(Seq(1L, 2L, 3L).toDF("id"))

@@ -50,6 +50,25 @@ class LshSpec extends SparkSpecBase {
       b.map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3)))))
   }
 
+  test("codes equal the two-step projection (aliased tdc, then explode) row for row") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    val corpus = (0 until 400).map(i => (i.toLong, Seq.fill(32)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val m = Lsh.fit(corpus, "embedding", LshParams())
+    // the coding plan before the kernel moved inline into explode
+    val twoStep = corpus
+      .select(col("vec_id").cast("long").as("id"), Lsh.lshCodes(col("embedding"), m).as("tdc"))
+      .select(col("id"), explode(col("tdc")).as("c"))
+      .select(col("id"), col("c.t").as("t"), col("c.d").as("d"),
+        col("c.key").as("key"), col("c.code").as("code"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("id", "t", "d").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getSeq[Long](4)))
+    val got = rows(LshIndex.codes(corpus, "vec_id", "embedding", m))
+    assert(got.length == 400 * 24)
+    assert(got.sameElements(rows(twoStep)), "inline coding diverged from the two-step projection")
+  }
+
   test("partition build: blocks of <= 64, sorted non-overlapping key ranges per (t,d)") {
     val built = LshIndex.build(LshIndex.codes(emb, "vec_id", "embedding", model), 64)
     val summ = built.summaries.orderBy("t", "d", "block").collect()

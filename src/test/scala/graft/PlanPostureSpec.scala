@@ -1,7 +1,13 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.execution.FormattedMode
+
+import graft.dedup.{MinHashShingleSig, SimHash64}
+import graft.functions.L2Distance
+import graft.lsh.{HammingDistance, LshCodesExpr}
 
 /**
  * Structural plan assertions: the scale posture (pushdown, broadcast,
@@ -16,6 +22,46 @@ class PlanPostureSpec extends SparkSpecBase {
 
   private def planOf(df: DataFrame): String =
     df.queryExecution.explainString(FormattedMode)
+
+  // ---- native kernels run once per row ----
+  // Root cause of the duplicates these cases pin: over an ATTRIBUTE
+  // input, `explode(x)` makes the optimizer's InferFiltersFromGenerate
+  // add `size(x) > 0 AND isnotnull(x)`, and predicate pushdown then
+  // rewrites x back into the expression that produced it, inside a
+  // Filter pushed down toward the scan. When x is a kernel's output the
+  // kernel runs in that Filter and again in the projection
+  // (LshIndex.codes ran lshcodesexpr about three times per vector).
+  // Generators must take the kernel inline. A join key computed by a
+  // kernel does the same through InferFiltersFromConstraints'
+  // `isnotnull(key)` unless the key is non-nullable (SemDedup's cell).
+
+  private val nativeKernels: Set[Class[_]] = Set(classOf[LshCodesExpr], classOf[L2Distance],
+    classOf[MinHashShingleSig], classOf[SimHash64], classOf[HammingDistance])
+
+  private def isKernel(e: Expression): Boolean = nativeKernels(e.getClass)
+
+  /** Calls matching `p` in the optimized plan, subqueries included,
+    * split into (inside a Filter condition, in any other node). */
+  private def callSites(plan: LogicalPlan, p: Expression => Boolean)
+      : (Seq[Expression], Seq[Expression]) = {
+    val nodes = plan.collectWithSubqueries { case n => n }
+    def calls(es: Seq[Expression]) = es.flatMap(_.collect { case e if p(e) => e })
+    (calls(nodes.collect { case f: Filter => f.condition }),
+      calls(nodes.filterNot(_.isInstanceOf[Filter]).flatMap(_.expressions)))
+  }
+
+  /** Kernel calls a Filter evaluates that another node evaluates again. */
+  private def duplicatedKernels(plan: LogicalPlan): Seq[Expression] = {
+    val (inFilter, elsewhere) = callSites(plan, isKernel)
+    val projected = elsewhere.map(_.canonicalized).toSet
+    inFilter.filter(k => projected(k.canonicalized))
+  }
+
+  private def assertCodedOnce(plan: LogicalPlan, what: String): Unit = {
+    val (inFilter, elsewhere) = callSites(plan, _.isInstanceOf[LshCodesExpr])
+    assert(inFilter.isEmpty && elsewhere.size == 1,
+      s"$what must call lshcodesexpr exactly once, outside any Filter:\n$plan")
+  }
 
   test("q6: filters push down to the parquet scan") {
     val p = plan("q6_revenue")
@@ -267,6 +313,60 @@ class PlanPostureSpec extends SparkSpecBase {
     // no flatMapGroupsWithState
     val lp = stream.queryExecution.analyzed.toString()
     assert(!lp.contains("Aggregate") && !lp.contains("FlatMapGroupsWithState"), lp)
+  }
+
+  test("LSH coding plans call the kernel once per vector: codes, queryCodes, streaming ingest") {
+    val emb = Tables.embeddings(spark, sf)
+    val model = graft.query.AnnQuery.setupModel(spark, sf)
+    assertCodedOnce(graft.index.LshIndex.codes(emb, "vec_id", "embedding", model)
+      .queryExecution.optimizedPlan, "LshIndex.codes")
+    assertCodedOnce(graft.query.AnnQuery.queryCodes(emb.limit(8), model)
+      .queryExecution.optimizedPlan, "AnnQuery.queryCodes")
+    // a streaming frame cannot be optimized as a batch query; run the
+    // session optimizer over its analyzed plan instead
+    val stream = graft.streaming.StreamingIngest.codedVectorStream(
+      spark, sf + "/embeddings.parquet", model, emb.schema)
+    assertCodedOnce(spark.sessionState.optimizer.execute(stream.queryExecution.analyzed),
+      "StreamingIngest.codedVectorStream")
+  }
+
+  test("embed_project / embed_pca project each vector once: no Filter over the projection") {
+    for (name <- Seq("embed_project", "embed_pca")) {
+      val p = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
+      val (inFilter, elsewhere) = callSites(p, _.isInstanceOf[ArrayTransform])
+      assert(inFilter.isEmpty && elsewhere.size == 1,
+        s"$name must run its projection once, outside any Filter:\n$p")
+    }
+  }
+
+  test("registry: no native kernel runs both in an inferred Filter and in a projection") {
+    // the entries whose optimized plan calls a native kernel (a scan of
+    // all 193 found exactly these); only their plans are built here
+    val kernelEntries = Seq(
+      "ann_bq_topk", "ann_brute_topk", "ann_filtered_topk", "ann_ivfbq_filtered_topk",
+      "ann_ivfbq_topk", "ann_ivfmrl_filtered_topk", "ann_ivfmrl_topk",
+      "ann_ivfpq_filtered_topk", "ann_ivfpq_topk", "ann_ivfsq_filtered_topk", "ann_ivfsq_topk",
+      "ann_lsh_filtered_topk", "ann_lsh_topk_delta", "ann_lsh_topk_distjoin", "ann_mrl_topk",
+      "ann_multidim_brute", "ann_multidim_topk", "ann_pcapq_topk", "ann_range_search",
+      "ann_search_autotuned", "ann_search_probe_autotuned", "ann_sq_topk",
+      "decontaminate_semantic", "decrypt_refine", "dedup_minhash_compact",
+      "dedup_semantic_compact", "dedup_semantic_compact_staged", "dedup_semantic_tune",
+      "embed_cluster", "embed_pq", "hybrid_search_rrf", "ivf_rebalance", "ivf_stats",
+      "knn_join", "knn_join_delta", "knn_join_sharded", "knn_join_sharded_staged", "lsh_code",
+      "multimodal_neardup_compact_staged", "multimodal_neardup_delta_compact", "query_token",
+      "sample_cluster_balanced", "simsearch_ivf")
+    val plans = kernelEntries.map(name =>
+      name -> SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan)
+    // some entries read staged fixtures once those exist, so not every
+    // plan shows its kernel on every run; together they must show these
+    val seen: Set[Class[_]] =
+      plans.flatMap { case (_, p) => callSites(p, isKernel)._2.map(_.getClass) }.toSet
+    assert(Set[Class[_]](classOf[LshCodesExpr], classOf[L2Distance], classOf[HammingDistance],
+      classOf[MinHashShingleSig]).subsetOf(seen), s"kernels seen: $seen")
+    val bad = plans.flatMap { case (name, p) =>
+      duplicatedKernels(p).map(k => s"$name: ${k.getClass.getSimpleName}")
+    }
+    assert(bad.isEmpty, s"kernels evaluated again inside a Filter:\n${bad.distinct.mkString("\n")}")
   }
 
   test("this-session entries: bloom verdict shuffle-free; pcapq ADC broadcasts, no cartesian") {
